@@ -1,46 +1,47 @@
-"""Driver-local relations with size-matched slicing.
+"""Driver-built rows as a JVM-side relation, shipped once as Arrow.
 
-``spark.createDataFrame(list, schema)`` parallelizes the list over
-``defaultParallelism`` slices, and every action over the resulting
-relation then pays one Python-worker round trip PER SLICE to apply the
-schema (``applySchemaToPythonRDD``) — measured ~0.5-0.8 s per job at
-local[32] for a handful of rows (r14, guide §4.1): 32 near-empty Python
-tasks serving 2 real ones. The commit plane builds many such small
-relations (publish file lists, partition-value maps, row-id base maps,
-file inventories), so that overhead lands on every write and scan.
+The metadata plane builds many small relations on the driver: publish
+file lists, partition-value maps, row-id base maps, DV authorization
+pairs, the Snapshot's file inventory and tombstone plane.
+``spark.createDataFrame(list, schema)`` would turn each into an RDD of
+pickled Python rows whose schema is applied by a Python worker on every
+action over it.
 
-``local_rows_df`` parallelizes with an explicit slice count matched to
-the row count instead: metadata-plane lists get one round trip, large
-inventories keep full parallelism. Semantics are identical — the same
-row-verification/conversion path runs, just inside ``len/ROWS_PER_SLICE
-+ 1`` tasks instead of ``defaultParallelism``.
+``local_rows_df`` instead converts the rows to a ``pyarrow.Table`` on
+the driver and passes that to ``spark.createDataFrame``, which decodes
+the Arrow batches in the JVM. Below
+``spark.sql.execution.arrow.localRelationThreshold`` Spark keeps the
+rows in a ``LocalRelation`` (``LocalTableScan`` in the physical plan);
+above it, in an RDD of ``arrowMaxRecordsPerBatch``-row Arrow batches.
+No Python worker runs in either case, and the optimizer folds filters
+and projections over a ``LocalRelation`` on the driver.
+
+Task width needs no argument: a ``LocalTableScan`` runs
+``min(rows, defaultParallelism)`` tasks, so a relation that fans
+per-row work out through ``mapInPandas`` (publish, footer reads, VACUUM
+listing) spreads one row per task up to the core count, and a handful
+of metadata rows never pays for empty tasks.
 """
 
 from __future__ import annotations
 
-from typing import Optional, Sequence
+from typing import Iterable, Union
 
-# One Python-worker round trip handles this many rows before another
-# slice is worth it (pickled metadata rows are tiny; the per-slice
-# constant dominates far past this point).
-ROWS_PER_SLICE = 10_000
+import pyarrow as pa
+from pyspark.sql import DataFrame
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 
-def local_rows_df(spark, rows: Sequence, schema,
-                  parts: Optional[int] = None):
-    """DataFrame over driver-built ``rows`` sliced to match their size.
-
-    ``parts`` overrides the slice count — pass the intended task count
-    when the relation fans out real per-row work (e.g. a ``mapInPandas``
-    over a staged-file list), so the explicit slicing replaces the
-    ``repartition`` shuffle those call sites previously needed.
-    """
-    rows = rows if isinstance(rows, list) else list(rows)
-    if not rows:
-        return spark.createDataFrame([], schema)
-    if parts is None:
-        parts = len(rows) // ROWS_PER_SLICE + 1
-    parts = max(1, min(parts, len(rows),
-                       spark.sparkContext.defaultParallelism))
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, parts), schema)
+def local_rows_df(spark, rows: Iterable,
+                  schema: Union[T.StructType, str]) -> DataFrame:
+    """DataFrame over driver-built ``rows`` (tuples or ``Row``s, read
+    by position) with ``schema`` (a ``StructType`` or a DDL string)."""
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema)
+    return spark.createDataFrame(table, schema)

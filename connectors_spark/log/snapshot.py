@@ -35,8 +35,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import filenames as fn
-from .actions import (SINGLE_ACTION_SCHEMA, AddFile, Metadata, Protocol,
-                      from_json_line)
+from .actions import (ADD_SCHEMA, SINGLE_ACTION_SCHEMA, AddFile, Metadata,
+                      Protocol, from_json_line)
 from .logstore import LogStore, strip_scheme
 from .segment import LogSegment
 
@@ -83,9 +83,7 @@ def _files_row_factory():
     inventory is field-compatible with a replayed one (named access +
     ``__fields__``)."""
     from pyspark.sql import Row
-    return Row("path", "partitionValues", "size", "modificationTime",
-               "dataChange", "stats", "tags", "baseRowId",
-               "defaultRowCommitVersion", "version")
+    return Row(*_FILES_SCHEMA.names)
 
 
 def apply_tail_to_files_rows(prev_rows: Sequence, tail, table_path: str
@@ -130,14 +128,18 @@ def _tombstone_row_factory():
     """Row factory matching ``_all_tombstones_df``'s column order —
     the tombstone-plane twin of :func:`_files_row_factory`."""
     from pyspark.sql import Row
-    return Row("path", "deletionTimestamp", "tags",
-               "extendedFileMetadata", "partitionValues", "size",
-               "version")
+    return Row(*_TOMBSTONE_SCHEMA.names)
 
 
-# Explicit schema for tombstone rows re-entering Spark as a local
-# relation (retained_tombstones' materialized path) — field-for-field
-# the distributed window plan's output.
+# Explicit schemas for the materialized planes re-entering Spark as
+# local relations (files_local_df, retained_tombstones) — each
+# field-for-field the output of its distributed window plan
+# (files_df: the add struct's fields plus the adding version;
+# _all_tombstones_df), so a local relation never has to build that
+# plan just to learn its schema.
+_FILES_SCHEMA = T.StructType(
+    ADD_SCHEMA.fields + [T.StructField("version", T.LongType())])
+
 _TOMBSTONE_SCHEMA = T.StructType([
     T.StructField("path", T.StringType(), False),
     T.StructField("deletionTimestamp", T.LongType()),
@@ -781,22 +783,19 @@ class Snapshot:
 
     @cached_property
     def files_local_df(self) -> DataFrame:
-        """``files_df`` as a driver-local relation over the materialized
-        inventory (same schema/rows). Metadata-plane filters and joins
-        (scan pruning, DML file scoping) run against this instead of
-        re-running the log replay; the distributed ``files_df`` plan
-        remains for genuinely distributed consumers (checkpoint
-        writes). ``localCheckpoint`` materializes the rows as JVM
-        InternalRows once — a bare ``createDataFrame`` from Python rows
-        keeps an ``applySchemaToPythonRDD`` step that round-trips
-        through a Python worker on EVERY action over the relation
-        (measured ~0.5 s/job at bench scale); after the checkpoint each
-        consumer job scans plain JVM rows. Freed by the ContextCleaner
-        with the Snapshot."""
+        """The materialized inventory (``_files_rows``) as a local
+        relation with ``files_df``'s rows and schema. Metadata-plane
+        filters and joins (scan pruning, DML file scoping, checkpoint
+        writes of a warm Snapshot) run against this instead of the log
+        replay. Neither the replay nor its plan is built: the schema is
+        the constant ``_FILES_SCHEMA``, and the rows cross into the JVM
+        once as Arrow (see ``localrel``), landing in a
+        ``LocalRelation`` that lives in the plan itself. The
+        distributed ``files_df`` plan remains for its own consumers:
+        the cold fallback of ``_files_rows``, checkpoint writes of cold
+        snapshots, restore, clone and optimize."""
         from ..localrel import local_rows_df
-        return (local_rows_df(self.spark, self._files_rows,
-                              self.files_df.schema)
-                .localCheckpoint(eager=True))
+        return local_rows_df(self.spark, self._files_rows, _FILES_SCHEMA)
 
     def all_files(self) -> List[AddFile]:
         """Collect active files to the driver. Only for callers whose

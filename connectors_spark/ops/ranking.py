@@ -27,8 +27,7 @@ from ..functions.text import tokens
 
 
 def _local_patterns_df(spark, patterns):
-    """Pattern list as a single-slice local relation (localrel: avoids
-    defaultParallelism-wide Python slices for a handful of rows)."""
+    """Pattern list as a local relation (see localrel)."""
     from ..localrel import local_rows_df
     return local_rows_df(spark, [(p,) for p in patterns],
                          "pattern: string")

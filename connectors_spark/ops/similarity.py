@@ -285,7 +285,9 @@ def _sig_array(vec_col: str, dim: int, num_planes: int, num_tables: int):
     vectorized BLAS — the difference between seconds and milliseconds of
     signature time per million rows. Plane values are identical to
     `signature_col`; only summation order inside a dot product differs,
-    which can flip a bucket bit only when |dot| ≲ 1e-13."""
+    which can flip a bucket bit only when |dot| ≲ 1e-13. A NaN dot sets
+    its bit: SQL orders NaN above 0, where numpy's ``NaN > 0`` is
+    False."""
     from pyspark.sql.types import ArrayType, LongType
 
     planes = np.array([_plane(dim, t * num_planes + p)
@@ -296,7 +298,8 @@ def _sig_array(vec_col: str, dim: int, num_planes: int, num_tables: int):
     @F.pandas_udf(ArrayType(LongType()))
     def _sigs(vs: pd.Series) -> pd.Series:
         mat = np.array(vs.tolist(), dtype=np.float64)      # n × dim
-        bits = (mat @ planes) > 0                          # n × T·m
+        dots = mat @ planes                                # n × T·m
+        bits = (dots > 0) | np.isnan(dots)
         packed = (bits.reshape(len(mat), num_tables, num_planes)
                   * weights).sum(axis=2)                   # n × T
         return pd.Series(list(packed))
@@ -371,7 +374,9 @@ def _exact_verify(cand: DataFrame, df: DataFrame, threshold: float,
     """Attach vectors to (a_id, b_id) candidates and apply the EXACT
     filter — identical arithmetic (dot/na/nb operation order, F.round
     half-up) to the pre-r15 per-pair path, so results are bit-identical
-    to the double-precision SQL oracle."""
+    to the double-precision SQL oracle. A zero norm divides to NULL
+    (``try_divide``), which the filter drops, as the oracle's division
+    by zero does; under ANSI mode a plain ``/`` would raise instead."""
     withn = df.select(F.col(id_col), F.col(vec_col),
                       norm_d(vec_col).alias("_n"))
     va = withn.select(F.col(id_col).alias("a_id"),
@@ -383,8 +388,9 @@ def _exact_verify(cand: DataFrame, df: DataFrame, threshold: float,
     return (cand.join(F.broadcast(va), "a_id")
             .join(F.broadcast(vb), "b_id")
             .select("a_id", "b_id",
-                    F.round(dot_d("_av", "_bv") / F.col("_na") /
-                            F.col("_nb"), 6).alias("sim"))
+                    F.round(F.try_divide(F.try_divide(
+                        dot_d("_av", "_bv"), F.col("_na")),
+                        F.col("_nb")), 6).alias("sim"))
             .filter(F.col("sim") >= threshold))
 
 
@@ -405,8 +411,10 @@ def cosine_neardup_pairs(df: DataFrame, threshold: float = 0.45,
     candidates within _PREFILTER_MARGIN of the threshold; survivors are
     re-verified by the EXACT JVM expression (dot/na/nb operation
     order + F.round half-up), so output is bit-identical to a
-    double-precision SQL oracle. IEEE division semantics (zero norms →
-    inf/nan) match the exact path: numpy and the JVM agree on both.
+    double-precision SQL oracle. A NaN similarity passes the
+    prefilter: NaN components give NaN, which Spark and the oracle
+    both order above every threshold, and a zero-norm vector gives
+    numpy's 0/0 = NaN, which the exact filter then drops as NULL.
     """
     from pyspark.sql.types import LongType, StructField, StructType
     ids, mat, _ = _corpus_closure(df, id_col, vec_col)
@@ -424,7 +432,8 @@ def cosine_neardup_pairs(df: DataFrame, threshold: float = 0.45,
             anorm = np.sqrt((amat * amat).sum(axis=1))
             with np.errstate(divide="ignore", invalid="ignore"):
                 sims = (amat @ mat.T) / anorm[:, None] / norms[None, :]
-                keep = (sims >= cut) & (ids[None, :] > aids[:, None])
+                keep = (((sims >= cut) | np.isnan(sims))
+                        & (ids[None, :] > aids[:, None]))
             ai, bi = np.nonzero(keep)
             yield pd.DataFrame({"a_id": aids[ai].astype(np.int64),
                                 "b_id": ids[bi]})
@@ -519,7 +528,7 @@ def cosine_neardup_pairs_lsh(df: DataFrame, threshold: float = 0.45,
             with np.errstate(divide="ignore", invalid="ignore"):
                 sims = (np.einsum("ij,ij->i", mat[ai], mat[bi])
                         / norms[ai] / norms[bi])
-            keep = sims >= cut
+            keep = (sims >= cut) | np.isnan(sims)
             yield pdf[["a_id", "b_id"]][keep]
 
     cand = cand.mapInPandas(prefilter, pair_schema).distinct()

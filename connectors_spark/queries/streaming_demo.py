@@ -39,6 +39,7 @@ case) is pinned here by st_dedup_restart.
 
 from __future__ import annotations
 
+import contextlib
 import shutil
 import tempfile
 import uuid
@@ -63,8 +64,23 @@ def _stream(spark, path: str, drop_version: bool = True):
     return src.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
-def _ck() -> str:
-    return tempfile.mkdtemp(prefix="cs_st_ck_")
+@contextlib.contextmanager
+def _scratch():
+    """A fresh directory for one gate's checkpoints and its own source
+    and sink tables, removed when the gate finishes. A gate that reads
+    back a table inside it returns a materialized result."""
+    d = tempfile.mkdtemp(prefix="cs_st_")
+    try:
+        yield d
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+
+
+def _materialized(df):
+    """``df``'s (small, aggregated) rows as a local relation, so the
+    result outlives the scratch directory it was read from."""
+    from ..localrel import local_rows_df
+    return local_rows_df(df.sparkSession, df.collect(), df.schema)
 
 
 def _events_table(spark, sf_dir: str) -> str:
@@ -90,10 +106,11 @@ def st_window_rollup(spark, sf_dir):
            .groupBy(F.window("ts", "1 day").alias("w"), "event_type")
            .agg(F.count(F.lit(1)).alias("n_events"),
                 F.round(F.sum("value"), 2).alias("sum_value")))
-    q = (agg.writeStream.format("memory").queryName(name)
-         .outputMode("complete").option("checkpointLocation", _ck())
-         .trigger(availableNow=True).start())
-    q.awaitTermination(300)
+    with _scratch() as ck:
+        q = (agg.writeStream.format("memory").queryName(name)
+             .outputMode("complete").option("checkpointLocation", ck)
+             .trigger(availableNow=True).start())
+        q.awaitTermination(300)
     return (spark.table(name)
             .select(F.col("w.start").cast("date").alias("day"),
                     "event_type", "n_events", "sum_value"))
@@ -112,28 +129,27 @@ def st_dedup_restart(spark, sf_dir):
     # batch ids restart from the checkpoint, not from 0. Fresh source/
     # sink/checkpoint per invocation — the restart dance IS the query.
     ev = load(spark, sf_dir, "events")
-    src_path = tempfile.mkdtemp(prefix="cs_st_ddsrc_")
-    sink_path = tempfile.mkdtemp(prefix="cs_st_ddsink_")
-    shutil.rmtree(src_path); shutil.rmtree(sink_path)
-    ck = _ck()
     from ..streaming import DeltaStreamSink
-    t = DeltaTable.for_path(spark, src_path)
-    t.write(ev, mode="append")
-    sink = DeltaStreamSink(sink_path, app_id="st_dedup_restart")
+    with _scratch() as d:
+        src_path, sink_path, ck = (f"{d}/src", f"{d}/sink", f"{d}/ck")
+        t = DeltaTable.for_path(spark, src_path)
+        t.write(ev, mode="append")
+        sink = DeltaStreamSink(sink_path, app_id="st_dedup_restart")
 
-    def run():
-        q = (_stream(spark, src_path)
-             .dropDuplicates(["event_id"])
-             .writeStream.foreachBatch(sink.foreach_batch)
-             .option("checkpointLocation", ck)
-             .trigger(availableNow=True).start())
-        q.awaitTermination(300)
+        def run():
+            q = (_stream(spark, src_path)
+                 .dropDuplicates(["event_id"])
+                 .writeStream.foreachBatch(sink.foreach_batch)
+                 .option("checkpointLocation", ck)
+                 .trigger(availableNow=True).start())
+            q.awaitTermination(300)
 
-    run()
-    t.write(ev.filter(F.col("event_id") % 2 == 0), mode="append")
-    run()
-    out = DeltaTable.for_path(spark, sink_path).to_df()
-    return (out.groupBy("event_type")
+        run()
+        t.write(ev.filter(F.col("event_id") % 2 == 0), mode="append")
+        run()
+        out = DeltaTable.for_path(spark, sink_path).to_df()
+        return _materialized(
+            out.groupBy("event_type")
             .agg(F.count(F.lit(1)).alias("n_events"),
                  F.round(F.sum("value"), 2).alias("sum_value")))
 
@@ -180,10 +196,11 @@ def st_sessionize_flush(spark, sf_dir):
     sess = sessionize_stream(
         _stream(spark, d).withWatermark("ts", "1 hour"),
         gap_seconds=1800)
-    q = (sess.writeStream.format("memory").queryName(name)
-         .outputMode("append").option("checkpointLocation", _ck())
-         .trigger(availableNow=True).start())
-    q.awaitTermination(300)
+    with _scratch() as ck:
+        q = (sess.writeStream.format("memory").queryName(name)
+             .outputMode("append").option("checkpointLocation", ck)
+             .trigger(availableNow=True).start())
+        q.awaitTermination(300)
     return (spark.table(name)
             .filter(F.col("session_start")
                     < F.to_timestamp(F.lit("2029-01-01")))
@@ -236,10 +253,11 @@ def st_cdf_changes(spark, sf_dir):
     src = (spark.readStream.format("delta_stream")
            .option("path", d).option("readChangeFeed", "true")
            .option("startingVersion", "0").load())
-    q = (src.writeStream.format("memory").queryName(name)
-         .outputMode("append").option("checkpointLocation", _ck())
-         .trigger(availableNow=True).start())
-    q.awaitTermination(300)
+    with _scratch() as ck:
+        q = (src.writeStream.format("memory").queryName(name)
+             .outputMode("append").option("checkpointLocation", ck)
+             .trigger(availableNow=True).start())
+        q.awaitTermination(300)
     return (spark.table(name)
             .groupBy(F.col("_change_type").alias("change_type"))
             .agg(F.count(F.lit(1)).alias("n"),
@@ -265,17 +283,18 @@ def st_sink_roundtrip(spark, sf_dir):
     # hash.
     from ..streaming import DeltaStreamSink
     d = _events_table(spark, sf_dir)
-    sink_path = tempfile.mkdtemp(prefix="cs_st_rtsink_")
-    shutil.rmtree(sink_path)
-    sink = DeltaStreamSink(sink_path, app_id="st_sink_roundtrip",
-                           partition_by=["event_type"])
-    q = (_stream(spark, d)
-         .writeStream.foreachBatch(sink.foreach_batch)
-         .option("checkpointLocation", _ck())
-         .trigger(availableNow=True).start())
-    q.awaitTermination(300)
-    out = DeltaTable.for_path(spark, sink_path).to_df()
-    return (out.groupBy("event_type")
+    with _scratch() as tmp:
+        sink_path = f"{tmp}/sink"
+        sink = DeltaStreamSink(sink_path, app_id="st_sink_roundtrip",
+                               partition_by=["event_type"])
+        q = (_stream(spark, d)
+             .writeStream.foreachBatch(sink.foreach_batch)
+             .option("checkpointLocation", f"{tmp}/ck")
+             .trigger(availableNow=True).start())
+        q.awaitTermination(300)
+        out = DeltaTable.for_path(spark, sink_path).to_df()
+        return _materialized(
+            out.groupBy("event_type")
             .agg(F.count(F.lit(1)).alias("n_events"),
                  F.countDistinct("user_id").alias("n_users"),
                  F.round(F.sum("value"), 2).alias("sum_value")))

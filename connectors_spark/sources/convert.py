@@ -103,10 +103,8 @@ def convert_to_delta(spark: SparkSession, path: str,
             yield pd.DataFrame(rows, columns=["path", "stats", "size"])
 
     from ..localrel import local_rows_df
-    par = min(len(files),
-              spark.sparkContext.defaultParallelism) or 1
     stat_rows = (local_rows_df(spark, [(f,) for f in files],
-                               "path string", parts=par)
+                               "path string")
                  .mapInPandas(footer_pass,
                               "path string, stats string, size long")
                  .collect())

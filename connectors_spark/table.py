@@ -3005,12 +3005,10 @@ class TableMaintenance:
                                    columns=["rel", "stats", "size"])
 
         from .localrel import local_rows_df
-        par = min(len(missing),
-                  spark.sparkContext.defaultParallelism) or 1
         stat_rows = {r["rel"]: r for r in
                      (local_rows_df(
                          spark, [(f.path,) for f in missing],
-                         "rel string", parts=par)
+                         "rel string")
                       .mapInPandas(footer_pass,
                                    "rel string, stats string, size long")
                       .collect())}
@@ -3187,11 +3185,8 @@ class TableMaintenance:
                                    columns=["path"])
 
         from .localrel import local_rows_df
-        n_parts = min(len(files),
-                      spark.sparkContext.defaultParallelism) or 1
         missing = [r["path"] for r in
-                   local_rows_df(spark, files, "path string, fs string",
-                                 parts=n_parts)
+                   local_rows_df(spark, files, "path string, fs string")
                    .mapInPandas(probe, T2.StructType(
                        [T2.StructField("path", T2.StringType())]))
                    .collect()]
@@ -3302,10 +3297,8 @@ class TableMaintenance:
                 yield pd.DataFrame({"rel": rels, "mtime": mts})
 
         from .localrel import local_rows_df
-        n_seed_parts = min(len(seeds),
-                           spark.sparkContext.defaultParallelism) or 1
         listing = (local_rows_df(spark, [(s,) for s in seeds],
-                                 "seed string", parts=n_seed_parts)
+                                 "seed string")
                    .mapInPandas(list_subtree, "rel string, mtime long"))
 
         # Protective set: active files ∪ referenced deletion-vector

@@ -238,18 +238,13 @@ def publish_plan(spark, staging: str, table_path: str,
                 rows["tags"].append(tags)
             yield pd.DataFrame(rows)
 
-    # Explicit slicing replaces the repartition: the file list lands in
-    # n_parts tasks directly, with no shuffle stage and no
-    # defaultParallelism-wide Python source (r14, guide §2.4/§4.1 —
-    # createDataFrame(list).repartition cost ~0.7 s/commit at local[32]
-    # for a 2-file publish, almost all of it empty Python slices).
+    # The local relation's own width replaces a repartition: its
+    # LocalTableScan spreads the file list over min(files,
+    # defaultParallelism) tasks with no shuffle stage (see localrel).
     from .localrel import local_rows_df
-    n_parts = min(len(rel_paths),
-                  spark.sparkContext.defaultParallelism) or 1
     src = local_rows_df(
-        spark, list(zip(rel_paths, dest_rels, want_stats)),
-        "rel_path string, dest_rel string, want_stats boolean",
-        parts=n_parts)
+        spark, zip(rel_paths, dest_rels, want_stats),
+        "rel_path string, dest_rel string, want_stats boolean")
     return src.mapInPandas(_publish, out_schema)
 
 

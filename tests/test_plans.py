@@ -116,10 +116,8 @@ def test_bloom_skip_plan_never_collects_inventory(spark, tmp_path):
     # pruned-files plan must stay a pure DataFrame plan with no Python
     # EVALUATION nodes (per-file compute stays codegen'd JVM). The
     # inventory relation itself is the Snapshot's materialized local
-    # state (r14) — its RDD debug name mentions
-    # "applySchemaToPythonRDD", which is a createDataFrame artifact,
-    # not per-row Python execution, so match eval-node names rather
-    # than the bare substring.
+    # state, a LocalTableScan over Arrow-built rows; the pin names the
+    # Python evaluation nodes it forbids.
     from pyspark.sql import functions as F
 
     from connectors_spark import DeltaTable
@@ -179,7 +177,7 @@ def test_incremental_snapshot_state_matches_full_replay(spark, tmp_path):
 def test_scan_reuses_materialized_inventory(spark, tmp_path):
     # r14: a Snapshot materializes its active-file inventory once; a
     # second scan of the same Snapshot must plan over the local
-    # relation (Scan ExistingRDD) instead of re-running the log-replay
+    # relation (LocalTableScan) instead of re-running the log-replay
     # window (no parquet/json checkpoint scan, no Window node), and the
     # materialized row list must be the cached object itself.
     from pyspark.sql import functions as F
@@ -191,8 +189,65 @@ def test_scan_reuses_materialized_inventory(spark, tmp_path):
     snap = t.log.snapshot()
     assert snap._files_rows is snap._files_rows          # cached once
     p = plan_of(t.scan(Col("uid") == Lit(7)).files())
-    assert "ExistingRDD" in p
+    assert "LocalTableScan" in p
     assert "Window" not in p and "Scan parquet" not in p
+
+
+def test_files_schema_constant_matches_window_plan(spark, tmp_path):
+    # files_local_df takes its schema from the constant _FILES_SCHEMA
+    # instead of building files_df; the constant must equal the
+    # distributed window plan's schema field for field (names, types,
+    # nullability, order) — on a JSON-only segment and on one read
+    # through a checkpoint, for a partitioned, row-tracked table with a
+    # DV delete (tags) in its history.
+    from connectors_spark import DeltaTable
+    from connectors_spark.expressions import Col, Lit
+    from connectors_spark.log.checkpoints import write_checkpoint
+    from connectors_spark.log.snapshot import _FILES_SCHEMA, Snapshot
+    from tests.conftest import read_table
+
+    t = DeltaTable.for_path(spark, str(tmp_path / "fs"))
+    t.write(read_table(spark, "orders"), partition_by=["o_orderstatus"],
+            configuration={"delta.enableRowTracking": "true",
+                           "delta.protocol.autoUpgrade": "true"})
+    t.delete(Col("o_orderkey") < Lit(100), deletion_vectors=True)
+
+    def fresh():
+        s = t.log.snapshot()
+        return Snapshot(spark, s.table_path, s.segment, s.store)
+
+    assert fresh().files_df.schema == _FILES_SCHEMA
+    write_checkpoint(t.log.snapshot())
+    t.update({"o_totalprice": "o_totalprice + 1"},
+             Col("o_orderkey") < Lit(500))
+    snap = fresh()
+    assert snap.segment.checkpoint_files
+    assert snap.files_df.schema == _FILES_SCHEMA
+    # the local relation carries it on the JVM side too
+    assert snap.files_local_df.select("*").schema == _FILES_SCHEMA
+
+
+def test_pruned_scan_after_commit_skips_replay_plan(spark, tmp_path):
+    # the scan after a commit runs over the new Snapshot's inventory
+    # without ever building the distributed replay plan (files_df and
+    # the actions_df under it): neither for the rows nor their schema
+    from pyspark.sql import functions as F
+
+    from connectors_spark import DeltaTable
+    from connectors_spark.expressions import Col, Lit
+    t = DeltaTable.for_path(spark, str(tmp_path / "skip"))
+    df = spark.range(200).select(F.col("id").alias("uid"),
+                                 (F.col("id") % 4).alias("p"))
+    t.write(df, partition_by=["p"])
+    assert t.scan(Col("p") == Lit(1)).files().count() > 0
+    t.write(df.where("uid < 50"), mode="append")
+    snap = t.log.snapshot()
+    files = t.scan((Col("p") == Lit(2)) & (Col("uid") < Lit(20))) \
+        .collect_files()
+    assert files and all(f.partitionValues["p"] == "2" for f in files)
+    assert t.log.snapshot() is snap
+    assert "_files_rows" in snap.__dict__
+    assert "files_df" not in snap.__dict__
 
 
 def test_fuzzy_edit_pairs_no_cartesian(plans):
@@ -681,9 +736,8 @@ def test_join_key_bloom_prune_plan_stays_pure(spark, tmp_path):
     keys = spark.range(100).select((F.col("id") * 31).alias("k"))
     scan = prune_by_join_keys(t, "uid", keys)
     p = plan_of(scan.files())
-    # eval-node names, not the bare substring: the materialized
-    # inventory's RDD debug name contains "applySchemaToPythonRDD"
-    # (createDataFrame artifact, not per-row Python execution)
+    # eval-node names: the pin names the Python evaluation nodes it
+    # forbids
     assert "BatchEvalPython" not in p and "ArrowEval" not in p \
         and "MapInPandas" not in p
     # one exists-expression, not 100 unrolled forall probes
