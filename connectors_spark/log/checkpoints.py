@@ -3,10 +3,15 @@
 
 A checkpoint is the full snapshot state as SingleAction-shaped Parquet:
 all active AddFiles (paths re-relativized), retained RemoveFile tombstones,
-latest Protocol + Metadata, and the last SetTransaction per appId. The
-state rows are produced DISTRIBUTED (from ``snapshot.files_df``) and the
-output can be split into N parts for tables whose state no longer fits one
-file -- readers glob the parts back together (segment._complete_checkpoints).
+latest Protocol + Metadata, the last SetTransaction per appId and the
+active metadata domains. The header rows come from the Snapshot's
+log-replay kernel. When the Snapshot already holds its file planes
+(``_files_rows``/``_tombstone_rows``) and they are small, one pyarrow
+write on the driver produces a single-part checkpoint; otherwise a Spark
+job writes the planes' rows, or for a cold Snapshot the distributed
+window plan (``snapshot.files_df``), and the output can be split into N
+parts (or v2 sidecars) for tables whose state no longer fits one file --
+readers glob the parts back together (segment._complete_checkpoints).
 
 Spark can't name its output files, so parts are written to a temp dir and
 renamed into the checkpoint name(s) -- the same temp-file+rename dance the

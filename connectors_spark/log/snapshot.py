@@ -1,18 +1,21 @@
-"""Snapshot: the state of a Delta table at one version, as DataFrames.
+"""Snapshot: the state of a Delta table at one version.
 
 Spark-first re-expression of the reference's snapshot machinery:
 
-- protocol & metadata: reverse replay with short-circuit
-  (``SnapshotImpl.loadTableProtocolAndMetadata``, SnapshotImpl.scala:164-246)
-  -- done driver-side over the bounded post-checkpoint tail (a checkpoint
-  caps it at ``checkpointInterval`` small JSON files) plus a column-pruned
-  pyarrow read of the checkpoint for the rare fallback.
-- state reconstruction (``InMemoryLogReplay.append``,
-  InMemoryLogReplay.scala:51-84) -- done as ONE distributed pass: a window
-  dedup over (add ∪ remove) keyed by canonical path, newest version wins.
-  This scales to checkpoints with millions of AddFiles because the shuffle
-  is on ``path`` (unique, unskewed) and Parquet/JSON parsing happens on
-  executors.
+- state reconstruction (``InMemoryLogReplay``, InMemoryLogReplay.scala:
+  51-92): one log-replay kernel (``replay.LogReplay``) folds the
+  post-checkpoint tail, read and parsed once per Snapshot, and the
+  checkpoint's column groups on first use, into every state plane:
+  protocol and metadata, set transactions, domain metadata, active
+  files and tombstones. The post-commit seed (``DeltaLog.update``)
+  carries the previous Snapshot's kernel forward and folds only the
+  new commits.
+- the file planes of a checkpoint too big for the driver
+  (``replay.replays_on_driver``) come from ONE distributed pass
+  instead: a window dedup over (add ∪ remove) keyed by canonical path,
+  newest version wins (``files_df``, ``_all_tombstones_df``). The
+  shuffle is on ``path`` (unique, unskewed) and Parquet/JSON parsing
+  happens on executors; the plan is also the kernel's parity oracle.
 - table data read (``SnapshotImpl.open`` + CloseableParquetDataIterator,
   SnapshotImpl.scala:107-116) -- ``spark.read.parquet`` over the active
   files; partition values are reassembled from ``AddFile.partitionValues``
@@ -23,8 +26,6 @@ Spark-first re-expression of the reference's snapshot machinery:
 
 from __future__ import annotations
 
-import json
-import os
 import time
 import urllib.parse
 from functools import cached_property
@@ -35,155 +36,39 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import filenames as fn
-from .actions import (ADD_SCHEMA, SINGLE_ACTION_SCHEMA, AddFile, Metadata,
-                      Protocol, from_json_line)
+from .actions import SINGLE_ACTION_SCHEMA, AddFile, Metadata, Protocol
 from .logstore import LogStore, strip_scheme
+from .replay import (_FILES_SCHEMA, _TOMBSTONE_SCHEMA, FILES, HEADER,
+                     LogReplay, canonical_path, checkpoint_parts,
+                     read_tail, replays_on_driver)
 from .segment import LogSegment
 
 MAX_READER_VERSION = 1
 
 
-def _decode_path(p: str) -> str:
-    return urllib.parse.unquote(p)
-
-
-def canonical_path(p: str, table_path: str) -> str:
-    """Absolute posix path for a log ``path`` entry (URI-decoded; relative
-    paths resolve against the table root). Mirrors
-    SnapshotImpl.canonicalizePath (SnapshotImpl.scala:349-362).
-
-    IDEMPOTENT on its own output (r15 correctness fix): a bare
-    ``/``-absolute input is already canonical/PHYSICAL and is returned
-    as-is — Spark's Hive dir escaping puts literal ``%XX`` bytes into
-    directory names (partition values containing ``=``, ``/``, ``%``…),
-    so decoding a physical path a second time corrupts it. Before the
-    fix, re-canonicalizing inventory-derived paths made DML removes and
-    rewrite subsets silently miss every file in such partitions (the
-    logged REMOVE path no longer matched its ADD). Our writer never
-    emits bare-absolute paths into the log (relativize produces
-    relative or ``file://``-quoted), so log-domain inputs are
-    unaffected."""
-    if p.startswith("/"):
-        return p
-    d = _decode_path(p)
-    if "://" in d:
-        rest = d.split("://", 1)[1]
-        slash = rest.find("/")
-        return rest[slash:] if slash >= 0 else "/"
-    if d.startswith("file:"):
-        return d[len("file:"):]
-    if d.startswith("/"):
-        return d
-    return table_path.rstrip("/") + "/" + d
-
-
-def _files_row_factory():
-    """Row factory matching files_df's column order exactly —
-    incremental snapshot updates build rows through this so a seeded
-    inventory is field-compatible with a replayed one (named access +
-    ``__fields__``)."""
-    from pyspark.sql import Row
-    return Row(*_FILES_SCHEMA.names)
-
-
-def apply_tail_to_files_rows(prev_rows: Sequence, tail, table_path: str
-                             ) -> List:
-    """Incremental state update (delta-spark's InMemoryLogReplay
-    incremental path, r14): apply the tail commits' add/remove actions
-    over a previous Snapshot's materialized inventory, driver-side —
-    O(tail actions), no Spark job, no checkpoint re-read.
-
-    ``tail`` is an iterable of (version, actions) in ascending version
-    order. Equivalence with the distributed window dedup: the previous
-    rows ARE latest-active-per-path at the previous version, and within
-    one version an add beats a remove of the same path (the window's
-    is_add tiebreak), so sequential remove-then-add per version yields
-    the identical final state."""
-    from .actions import RemoveFile
-    row = _files_row_factory()
-    state = {r["path"]: r for r in prev_rows}
+def apply_tail_to_files_rows(state: Optional[LogReplay], tail,
+                             table_path: str) -> LogReplay:
+    """Fold ``tail`` -- ``(version, actions)`` pairs in ascending version
+    order -- into the log-replay kernel ``state`` (a new, empty kernel
+    for ``table_path`` when None) and return it. Every tail fold runs
+    through this function: a cold Snapshot's post-checkpoint tail, the
+    post-commit seed's new commits and the streaming source's initial
+    snapshot. The lakebench tracer wraps it by this name (span
+    ``log.replay_tail``)."""
+    if state is None:
+        state = LogReplay(table_path)
     for v, actions in tail:
-        adds = {}
-        removes = set()
-        for a in actions:
-            if isinstance(a, AddFile):
-                adds[canonical_path(a.path, table_path)] = a
-            elif isinstance(a, RemoveFile):
-                removes.add(canonical_path(a.path, table_path))
-        for p in removes:
-            if p not in adds:
-                state.pop(p, None)
-        for p, a in adds.items():
-            state[p] = row(p, dict(a.partitionValues)
-                           if a.partitionValues is not None else None,
-                           a.size, a.modificationTime,
-                           a.dataChange, a.stats,
-                           dict(a.tags) if a.tags is not None else None,
-                           a.baseRowId, a.defaultRowCommitVersion,
-                           int(v))
-    return list(state.values())
+        state.append(v, actions)
+    return state
 
 
-def _tombstone_row_factory():
-    """Row factory matching ``_all_tombstones_df``'s column order —
-    the tombstone-plane twin of :func:`_files_row_factory`."""
-    from pyspark.sql import Row
-    return Row(*_TOMBSTONE_SCHEMA.names)
-
-
-# Explicit schemas for the materialized planes re-entering Spark as
-# local relations (files_local_df, retained_tombstones) — each
-# field-for-field the output of its distributed window plan
-# (files_df: the add struct's fields plus the adding version;
-# _all_tombstones_df), so a local relation never has to build that
-# plan just to learn its schema.
-_FILES_SCHEMA = T.StructType(
-    ADD_SCHEMA.fields + [T.StructField("version", T.LongType())])
-
-_TOMBSTONE_SCHEMA = T.StructType([
-    T.StructField("path", T.StringType(), False),
-    T.StructField("deletionTimestamp", T.LongType()),
-    T.StructField("tags", T.MapType(T.StringType(), T.StringType())),
-    T.StructField("extendedFileMetadata", T.BooleanType()),
-    T.StructField("partitionValues",
-                  T.MapType(T.StringType(), T.StringType())),
-    T.StructField("size", T.LongType()),
-    T.StructField("version", T.LongType()),
-])
-
-
-def apply_tail_to_tombstone_rows(prev_rows: Sequence, tail,
-                                 table_path: str) -> List:
-    """Incremental twin of :func:`apply_tail_to_files_rows` for the
-    tombstone plane: a RemoveFile upserts its path's tombstone, an
-    AddFile clears it (a re-added path is active again, so its latest
-    action is no longer a remove). Within one version an add beats a
-    remove of the same path — the window's ``is_add`` tiebreak — so
-    removes are applied first and skipped when the same version re-adds
-    the path."""
-    from .actions import RemoveFile
-    row = _tombstone_row_factory()
-    state = {r["path"]: r for r in prev_rows}
-    for v, actions in tail:
-        adds = set()
-        removes = {}
-        for a in actions:
-            if isinstance(a, AddFile):
-                adds.add(canonical_path(a.path, table_path))
-            elif isinstance(a, RemoveFile):
-                removes[canonical_path(a.path, table_path)] = a
-        for p, a in removes.items():
-            if p not in adds:
-                state[p] = row(
-                    p, a.deletionTimestamp,
-                    dict(a.tags) if a.tags is not None else None,
-                    a.extendedFileMetadata,
-                    dict(a.partitionValues)
-                    if a.partitionValues is not None else None,
-                    a.size, int(v))
-        for p in adds:
-            state.pop(p, None)
-    return list(state.values())
+def replay_segment(store: LogStore, segment: LogSegment,
+                   table_path: str) -> LogReplay:
+    """A cold kernel for ``segment``: its post-checkpoint tail read,
+    parsed and folded once. Checkpoint column groups are folded in on
+    demand (``LogReplay.load``)."""
+    return apply_tail_to_files_rows(None, read_tail(store, segment),
+                                    table_path)
 
 
 def addfiles_from_rows(rows: Sequence) -> List[AddFile]:
@@ -282,73 +167,43 @@ class Snapshot:
         self.store = store
         self._min_file_retention_ts = min_file_retention_ts
         self._pm: Optional[Tuple[Protocol, Metadata]] = None
-        self._set_txns: Optional[Dict[str, int]] = None
 
     @property
     def version(self) -> int:
         return self.segment.version
 
     # ------------------------------------------------------------------
-    # Protocol & metadata (driver-side reverse replay, A2)
+    # Log replay: the kernel behind every state plane
     # ------------------------------------------------------------------
 
+    @cached_property
+    def _replay(self) -> LogReplay:
+        """This Snapshot's log-replay kernel. Cold: the segment's tail is
+        read, parsed and folded once here, and each checkpoint column
+        group is folded in on first use. The post-commit seed
+        (``_seed``) installs a carried-forward kernel instead."""
+        return replay_segment(self.store, self.segment, self.table_path)
+
+    def _seed(self, prev: "Snapshot", tail) -> None:
+        """Carry ``prev``'s kernel forward over ``tail``, the commits
+        (prev.version, self.version]. The file planes ``prev`` had
+        materialized stay materialized here."""
+        k = apply_tail_to_files_rows(prev._replay.copy(), tail,
+                                     self.table_path)
+        self.__dict__["_replay"] = k
+        for plane, attr in (("files", "_files_rows"),
+                            ("tombstones", "_tombstone_rows")):
+            if attr in prev.__dict__:
+                self.__dict__[attr] = list(getattr(k, plane).values())
+
     def _replay_driver_side(self):
-        """Scan post-checkpoint deltas newest->oldest for P&M and txns;
-        fall back to a column-pruned checkpoint read. The tail is bounded
-        by the checkpoint interval, so this is O(interval) small files."""
-        protocol: Optional[Protocol] = None
-        metadata: Optional[Metadata] = None
-        txns: Dict[str, int] = {}
-        for path in reversed(self.segment.deltas):
-            for line in self.store.read(path):
-                a = from_json_line(line)
-                if isinstance(a, Protocol) and protocol is None:
-                    protocol = a
-                elif isinstance(a, Metadata) and metadata is None:
-                    metadata = a
-                else:
-                    app = getattr(a, "appId", None)
-                    if app is not None and app not in txns:
-                        txns[app] = a.version
-        # The checkpoint must ALWAYS be read for SetTransactions: the
-        # post-checkpoint tail only proves which appIds committed since
-        # the checkpoint — older appIds' watermarks live solely in the
-        # checkpoint's txn column. P&M columns are pruned from the read
-        # when the tail already supplied them.
-        if self.segment.checkpoint_files:
-            need_pm = protocol is None or metadata is None
-            wanted = ("protocol", "metaData", "txn") if need_pm else ("txn",)
-            import pyarrow.parquet as pq
-            for cf in self.segment.checkpoint_files:
-                tbl = pq.read_table(cf, columns=[
-                    c for c in wanted
-                    if c in pq.read_schema(cf).names])
-                for row in tbl.to_pylist():
-                    p, m, x = row.get("protocol"), row.get("metaData"), row.get("txn")
-                    if p and p.get("minReaderVersion") is not None and protocol is None:
-                        protocol = Protocol(
-                            p["minReaderVersion"], p["minWriterVersion"],
-                            readerFeatures=(list(p["readerFeatures"])
-                                            if p.get("readerFeatures")
-                                            is not None else None),
-                            writerFeatures=(list(p["writerFeatures"])
-                                            if p.get("writerFeatures")
-                                            is not None else None))
-                    if m and m.get("id") and metadata is None:
-                        from .actions import Format
-                        fmt = m.get("format") or {}
-                        metadata = Metadata(
-                            id=m.get("id", ""), name=m.get("name"),
-                            description=m.get("description"),
-                            format=Format(fmt.get("provider", "parquet"),
-                                          fmt.get("options") or {}),
-                            schemaString=m.get("schemaString", ""),
-                            partitionColumns=list(m.get("partitionColumns") or []),
-                            configuration=dict(m.get("configuration") or {}),
-                            createdTime=m.get("createdTime"))
-                    if x and x.get("appId") and x["appId"] not in txns:
-                        txns[x["appId"]] = x["version"]
-        if protocol is None or metadata is None:
+        """Fill the header planes -- protocol, metadata, set transactions,
+        domain metadata -- from the kernel, reading the checkpoint's
+        header columns only when the kernel lacks them (a cold
+        Snapshot), and check the protocol is readable."""
+        k = self._replay
+        k.load(self.segment, HEADER)
+        if k.protocol is None or k.metadata is None:
             raise ValueError(
                 f"Delta log at {self.table_path} has no protocol/metadata "
                 f"(version {self.version})")
@@ -358,9 +213,13 @@ class Snapshot:
         # (log/features.py) so its own opt-in protocol upgrades stay
         # readable. Anything beyond still fails loudly.
         from .features import assert_readable
-        assert_readable(protocol, self.table_path)
-        self._pm = (protocol, metadata)
-        self._set_txns = txns
+        assert_readable(k.protocol, self.table_path)
+        self._pm = (k.protocol, k.metadata)
+
+    def _header(self) -> LogReplay:
+        if self._pm is None:
+            self._replay_driver_side()
+        return self._replay
 
     @property
     def protocol(self) -> Protocol:
@@ -377,43 +236,19 @@ class Snapshot:
     @property
     def set_transactions(self) -> Dict[str, int]:
         """Last SetTransaction version per appId (InMemoryLogReplay.scala:56-57)."""
-        if self._set_txns is None:
-            self._replay_driver_side()
-        return dict(self._set_txns)
+        return dict(self._header().txns)
 
     def txn_version(self, app_id: str) -> int:
         return self.set_transactions.get(app_id, -1)
 
-    @cached_property
+    @property
     def domain_metadata(self) -> Dict[str, str]:
         """Active metadata domains: ``domain -> configuration`` (Delta
         protocol 'Domain Metadata' replay: latest action per domain
-        wins; a removed=True tombstone hides the domain — including one
-        an older checkpoint still carries). Driver-side reverse walk of
-        the post-checkpoint tail (compacted substitutes carry the net
-        action per domain), then the checkpoint's domainMetadata column
-        for domains the tail didn't touch — the same bounded budget as
-        the P&M replay."""
-        from .actions import DomainMetadata
-        seen: Dict[str, Optional[str]] = {}
-        for path in reversed(self.segment.deltas):
-            for line in self.store.read(path):
-                a = from_json_line(line)
-                if isinstance(a, DomainMetadata) and a.domain not in seen:
-                    seen[a.domain] = None if a.removed else a.configuration
-        if self.segment.checkpoint_files:
-            import pyarrow.parquet as pq
-            for cf in self.segment.checkpoint_files:
-                if "domainMetadata" not in pq.read_schema(cf).names:
-                    continue
-                tbl = pq.read_table(cf, columns=["domainMetadata"])
-                for row in tbl.to_pylist():
-                    dm = row.get("domainMetadata")
-                    if dm and dm.get("domain") and dm["domain"] not in seen:
-                        seen[dm["domain"]] = (None if dm.get("removed")
-                                              else dm.get("configuration")
-                                              or "")
-        return {d: c for d, c in seen.items() if c is not None}
+        wins; a removed=True tombstone hides the domain -- including one
+        an older checkpoint still carries)."""
+        return {d: c for d, c in self._header().domains.items()
+                if c is not None}
 
     # ------------------------------------------------------------------
     # Actions DataFrame (S2: checkpoint + delta load)
@@ -444,21 +279,6 @@ class Snapshot:
         extra = [c for c in ("version", "is_checkpoint") if c in df.columns]
         return df.select(*cols, *extra)
 
-    def _v2_sidecar_paths(self, manifest: str) -> List[str]:
-        """Absolute paths of a v2 manifest's sidecar parquets (driver-
-        side column-pruned read — the manifest is O(sidecars) rows)."""
-        import pyarrow.parquet as pq
-        if "sidecar" not in pq.read_schema(manifest).names:
-            return []
-        out = []
-        for row in pq.read_table(manifest,
-                                 columns=["sidecar"]).to_pylist():
-            sc = row.get("sidecar")
-            if sc and sc.get("path"):
-                out.append(fn.sidecar_file(self.segment.log_path,
-                                           sc["path"]))
-        return out
-
     def actions_df(self) -> DataFrame:
         """All actions of the segment with ``version`` and ``is_checkpoint``
         columns. Executors parse the files in parallel (the reference's
@@ -481,14 +301,13 @@ class Snapshot:
                  .withColumn("is_checkpoint", F.lit(False)))
             parts.append(self._conform(d))
         if self.segment.checkpoint_files:
-            cfiles = list(self.segment.checkpoint_files)
-            if len(cfiles) == 1 and fn.is_v2_checkpoint_file(cfiles[0]):
+            cfiles = checkpoint_parts(self.segment)
+            if fn.is_v2_checkpoint_file(cfiles[0]):
                 # V2 checkpoint: the manifest carries P&M/txn/domain +
                 # SidecarFile references; add/remove state lives in the
                 # sidecar parquets. One explicit-schema read over
                 # manifest + sidecars (per-file missing columns scan as
                 # NULL) reconstructs the classic action set.
-                cfiles = cfiles + self._v2_sidecar_paths(cfiles[0])
                 c = (self.spark.read.schema(SINGLE_ACTION_SCHEMA)
                      .parquet(*cfiles)
                      .withColumn("version",
@@ -585,77 +404,27 @@ class Snapshot:
                 .where(F.coalesce(F.col("deletionTimestamp"),
                                   F.lit(0)) > min_ts))
 
+    def _plane(self, plane: str, window_plan) -> List:
+        """One file plane of the kernel as a row list: the checkpoint's
+        add/remove columns folded in on the driver when
+        ``replays_on_driver`` allows, else the rows of the distributed
+        ``window_plan()`` adopted whole."""
+        k = self._replay
+        if plane not in k.loaded:
+            if replays_on_driver(self.store, self.segment):
+                k.load(self.segment, FILES)
+            else:
+                k.adopt(plane, window_plan().collect())
+        return list(getattr(k, plane).values())
+
     @cached_property
     def _tombstone_rows(self) -> List:
         """ALL latest-per-path tombstones (no horizon), materialized
-        once per Snapshot — the tombstone-plane twin of
+        once per Snapshot -- the tombstone-plane twin of
         ``_files_rows``. Bounded by the paths removed-and-not-yet-
         readded, the same order of driver state as the active
         inventory."""
-        rows = self._tombstone_rows_driver_side()
-        if rows is not None:
-            return rows
-        return self._all_tombstones_df().collect()
-
-    def _tombstone_rows_driver_side(self) -> Optional[List]:
-        """Cold tombstone materialization WITHOUT a Spark job, when the
-        segment shape allows (r14): a classic checkpoint re-emits its
-        retained tombstones, so one driver-side pyarrow read of its
-        ``remove`` column plus the raw JSON tail replayed through
-        :func:`apply_tail_to_tombstone_rows` IS the tombstone plane —
-        ~0.1 s where the distributed window job costs 1.5-2 s at bench
-        scale. Returns None for every shape that needs the distributed
-        plan (v2/multi-part/compacted segments, non-POSIX stores, a
-        checkpoint too big to read single-process)."""
-        from . import filenames as fn
-        from .actions import from_json_line
-        from .logstore import LogStore
-        if type(self.store) is not LogStore:
-            return None
-        seg = self.segment
-        cfiles = list(seg.checkpoint_files)
-        if len(cfiles) > 1:
-            return None
-        if cfiles and fn.is_v2_checkpoint_file(cfiles[0]):
-            return None
-        if cfiles:
-            try:
-                if os.path.getsize(cfiles[0]) > 64 * 1024 * 1024:
-                    return None
-            except OSError:
-                return None
-        row = _tombstone_row_factory()
-        state: Dict[str, object] = {}
-        if cfiles:
-            import pyarrow.parquet as pq
-            try:
-                col = pq.read_table(
-                    cfiles[0], columns=["remove"]).column("remove")
-            except Exception:   # noqa: BLE001 — e.g. schema w/o remove
-                return None
-            for d in col.to_pylist():
-                if not d or d.get("path") is None:
-                    continue
-                p = canonical_path(d["path"], self.table_path)
-                state[p] = row(
-                    p, d.get("deletionTimestamp"),
-                    dict(d["tags"]) if d.get("tags") is not None
-                    else None,
-                    d.get("extendedFileMetadata"),
-                    dict(d["partitionValues"])
-                    if d.get("partitionValues") is not None else None,
-                    d.get("size"), int(seg.checkpoint_version))
-        tail = []
-        for pth in seg.deltas:
-            name = os.path.basename(pth)
-            if "compacted" in name:
-                return None     # net-folded ranges: window plan only
-            lines = self.store.read(pth)
-            tail.append((fn.delta_version(name),
-                         [a for a in (from_json_line(ln)
-                                      for ln in lines) if a is not None]))
-        return apply_tail_to_tombstone_rows(list(state.values()), tail,
-                                            self.table_path)
+        return self._plane("tombstones", self._all_tombstones_df)
 
     def _all_tombstones_df(self) -> DataFrame:
         """Latest-per-path RemoveFile tombstones, unfiltered — the
@@ -695,91 +464,14 @@ class Snapshot:
 
     @cached_property
     def _files_rows(self) -> List:
-        """The active-file inventory, materialized ONCE per Snapshot.
-
-        The reconstruction itself (``files_df`` — checkpoint read +
-        delta JSON parse + distributed window dedup) still runs as a
-        Spark job; this caches its RESULT. Every metadata consumer
-        (``to_df``'s per-file row collect, DML touched-file scoping,
-        scans, ``all_files``) previously re-ran the whole replay as its
-        own Spark job — a MERGE paid it 4-5 times per commit (measured
-        r14: 0.14-1.8 s per replay at bench scale, pure metadata-plane
-        overhead). Driver memory is O(active files), which every one of
-        those consumers already paid per call (``to_df`` collects the
-        inventory by design, like the reference's driver-side
-        in-memory state, DeltaLogImpl/SnapshotImpl); caching is
-        strictly fewer copies. Bounded by the Snapshot's lifetime —
-        a new version produces a new Snapshot and the old cache is
-        GC'd with it."""
-        rows = self._files_rows_driver_side()
-        if rows is not None:
-            return rows
-        return self.files_df.collect()
-
-    def _files_rows_driver_side(self) -> Optional[List]:
-        """Cold active-file materialization WITHOUT a Spark job, when
-        the segment shape allows (r15) — the files-plane twin of
-        ``_tombstone_rows_driver_side``: seed the state from one
-        driver-side pyarrow read of the checkpoint's ``add`` column,
-        then replay the raw JSON tail through
-        :func:`apply_tail_to_files_rows` (the r14-pinned incremental
-        path). The result is what ``files_df.collect()`` returns minus
-        the Spark job (~0.3-0.6 s per cold Snapshot at bench scale —
-        paid per invocation by every query that creates fresh tables or
-        time-travel snapshots). Returns None for every shape that needs
-        the distributed plan: v2/multi-part checkpoints, compacted
-        ranges, non-POSIX stores, or a checkpoint too big to parse
-        single-process (at 100 TB the inventory is millions of rows —
-        the executor-parallel replay stays the scale path)."""
-        if type(self.store) is not LogStore:
-            return None
-        seg = self.segment
-        cfiles = list(seg.checkpoint_files)
-        if len(cfiles) > 1:
-            return None
-        if cfiles and fn.is_v2_checkpoint_file(cfiles[0]):
-            return None
-        if cfiles:
-            try:
-                if os.path.getsize(cfiles[0]) > 64 * 1024 * 1024:
-                    return None
-            except OSError:
-                return None
-        row = _files_row_factory()
-        state: Dict[str, object] = {}
-        if cfiles:
-            import pyarrow.parquet as pq
-            try:
-                col = pq.read_table(
-                    cfiles[0], columns=["add"]).column("add")
-            except Exception:   # noqa: BLE001 — e.g. schema w/o add
-                return None
-            for d in col.to_pylist():
-                if not d or d.get("path") is None:
-                    continue
-                p = canonical_path(d["path"], self.table_path)
-                state[p] = row(
-                    p,
-                    dict(d["partitionValues"])
-                    if d.get("partitionValues") is not None else None,
-                    d.get("size"), d.get("modificationTime"),
-                    d.get("dataChange"), d.get("stats"),
-                    dict(d["tags"]) if d.get("tags") is not None
-                    else None,
-                    d.get("baseRowId"),
-                    d.get("defaultRowCommitVersion"),
-                    int(seg.checkpoint_version))
-        tail = []
-        for pth in seg.deltas:
-            name = os.path.basename(pth)
-            if "compacted" in name:
-                return None     # net-folded ranges: window plan only
-            lines = self.store.read(pth)
-            tail.append((fn.delta_version(name),
-                         [a for a in (from_json_line(ln)
-                                      for ln in lines) if a is not None]))
-        return apply_tail_to_files_rows(list(state.values()), tail,
-                                        self.table_path)
+        """The active-file inventory, materialized ONCE per Snapshot from
+        the kernel (``_plane``). Every metadata consumer (``to_df``'s
+        per-file rows, DML touched-file scoping, scans, ``all_files``)
+        reads this list instead of replaying the log again. Driver
+        memory is O(active files), like the reference's driver-side
+        in-memory state (DeltaLogImpl/SnapshotImpl), bounded by the
+        Snapshot's lifetime."""
+        return self._plane("files", lambda: self.files_df)
 
     @cached_property
     def files_local_df(self) -> DataFrame:

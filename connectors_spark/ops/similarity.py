@@ -358,15 +358,23 @@ _PREFILTER_MARGIN = 1e-4
 
 
 def _corpus_closure(df: DataFrame, id_col: str, vec_col: str):
-    """(ids int64 array, matrix float64 [n, dim], id -> row index dict)
-    collected to the driver — the same memory class as the forced
-    F.broadcast of the full corpus these pair verifiers already
-    required (a broadcast relation is built driver-side too)."""
+    """(ids int64 array, matrix float64 [n, dim], id -> row index dict,
+    id type) collected to the driver — the same memory class as the
+    forced F.broadcast of the full corpus these pair verifiers already
+    required (a broadcast relation is built driver-side too). The pair
+    output keeps the input's id type; ids must be integral, because the
+    closure holds them as int64."""
+    from pyspark.sql.types import IntegralType
+    id_type = df.schema[id_col].dataType
+    if not isinstance(id_type, IntegralType):
+        raise TypeError(
+            f"near-dup pairs need an integral id column; {id_col!r} is "
+            f"{id_type.simpleString()}")
     rows = df.select(F.col(id_col).alias("_id"),
                      F.col(vec_col).alias("_v")).collect()
     ids = np.array([r["_id"] for r in rows], dtype=np.int64)
     mat = np.array([r["_v"] for r in rows], dtype=np.float64)
-    return ids, mat, {int(i): ix for ix, i in enumerate(ids)}
+    return ids, mat, {int(i): ix for ix, i in enumerate(ids)}, id_type
 
 
 def _exact_verify(cand: DataFrame, df: DataFrame, threshold: float,
@@ -416,12 +424,12 @@ def cosine_neardup_pairs(df: DataFrame, threshold: float = 0.45,
     both order above every threshold, and a zero-norm vector gives
     numpy's 0/0 = NaN, which the exact filter then drops as NULL.
     """
-    from pyspark.sql.types import LongType, StructField, StructType
-    ids, mat, _ = _corpus_closure(df, id_col, vec_col)
+    from pyspark.sql.types import StructField, StructType
+    ids, mat, _, id_type = _corpus_closure(df, id_col, vec_col)
     norms = np.sqrt((mat * mat).sum(axis=1))
     cut = threshold - _PREFILTER_MARGIN
-    out_schema = StructType([StructField("a_id", LongType()),
-                             StructField("b_id", LongType())])
+    out_schema = StructType([StructField("a_id", id_type),
+                             StructField("b_id", id_type)])
 
     def prefilter(batches):
         for pdf in batches:
@@ -512,12 +520,12 @@ def cosine_neardup_pairs_lsh(df: DataFrame, threshold: float = 0.45,
     # numpy costs microseconds, while distinct-ing the full candidate
     # stream was a dedicated exchange over millions of 16-byte rows
     # (guide §2.3 — the shuffle, not the arithmetic, was the cost).
-    from pyspark.sql.types import LongType, StructField, StructType
-    ids_np, mat, idx = _corpus_closure(df, id_col, vec_col)
+    from pyspark.sql.types import StructField, StructType
+    _, mat, idx, id_type = _corpus_closure(df, id_col, vec_col)
     norms = np.sqrt((mat * mat).sum(axis=1))
     cut = threshold - _PREFILTER_MARGIN
-    pair_schema = StructType([StructField("a_id", LongType()),
-                              StructField("b_id", LongType())])
+    pair_schema = StructType([StructField("a_id", id_type),
+                              StructField("b_id", id_type)])
 
     def prefilter(batches):
         for pdf in batches:

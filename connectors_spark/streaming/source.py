@@ -33,7 +33,7 @@ from __future__ import annotations
 
 import json
 import os
-from typing import Iterator, List, Optional, Tuple
+from typing import Iterator, List, Optional
 
 from pyspark.sql.datasource import (DataSource, DataSourceStreamReader,
                                     InputPartition)
@@ -42,8 +42,8 @@ from pyspark.sql.types import LongType, StructField, StructType
 from ..dv import DV_TAG
 from ..errors import DeltaError
 from ..log import filenames as fn
-from ..log.actions import (AddCDCFile, AddFile, Format, Metadata,
-                           Protocol, RemoveFile, from_json_line)
+from ..log.actions import (AddCDCFile, AddFile, Metadata, Protocol,
+                           RemoveFile, from_json_line)
 # Module-scope imports only (no lazy `from ..x import` inside methods
 # that workers execute): this module ships to data-source workers by
 # value (shipping.py), which covers objects referenced at pickle time
@@ -51,7 +51,8 @@ from ..log.actions import (AddCDCFile, AddFile, Format, Metadata,
 from ..log import history as hist
 from ..log.logstore import default_log_store, strip_scheme
 from ..log.segment import get_log_segment
-from ..log.snapshot import canonical_path
+from ..log.replay import FILES, HEADER, LogReplay
+from ..log.snapshot import canonical_path, replay_segment
 from ..partition_values import decode as decode_partition_value
 
 
@@ -71,96 +72,18 @@ def _list_versions(store, log_path: str, after: int) -> List[int]:
                   if v > after)
 
 
-def _meta_from_dict(m: dict) -> Metadata:
-    fmt = m.get("format") or {}
-    return Metadata(
-        id=m.get("id", ""), name=m.get("name"),
-        description=m.get("description"),
-        format=Format(fmt.get("provider", "parquet"),
-                      fmt.get("options") or {}),
-        schemaString=m.get("schemaString", ""),
-        partitionColumns=list(m.get("partitionColumns") or []),
-        configuration=dict(m.get("configuration") or {}),
-        createdTime=m.get("createdTime"))
-
-
-def _latest_metadata(store, log_path: str) -> Metadata:
-    """Latest Metadata action by reverse delta-file scan (A2 shape,
-    Spark-free), falling back to the checkpoint's metaData column for
-    logs whose early versions were cleaned (W8) — the Metadata may
-    survive only in the checkpoint."""
-    names = [n for n in store.list_from(log_path) if fn.is_delta_file(n)]
-    for name in sorted(names, reverse=True):
-        for a in _read_version_actions(store, log_path,
-                                       fn.delta_version(name)):
-            if isinstance(a, Metadata):
-                return a
-    try:
-        seg = get_log_segment(store, log_path)
-    except (FileNotFoundError, ValueError):
-        seg = None
-    if seg is not None and seg.checkpoint_files:
-        import pyarrow.parquet as pq
-        for cf in seg.checkpoint_files:
-            if "metaData" not in pq.read_schema(cf).names:
-                continue
-            for row in pq.read_table(cf, columns=["metaData"]).to_pylist():
-                m = row.get("metaData")
-                if m and m.get("id"):
-                    return _meta_from_dict(m)
-    raise DeltaError(f"no Metadata found in {log_path}")
-
-
-def _snapshot_adds(store, log_path: str,
-                   version: Optional[int] = None
-                   ) -> Tuple[int, List[AddFile]]:
-    """Active AddFiles at ``version`` (None = latest), replayed
-    Spark-free: checkpoint Parquet (pyarrow) + post-checkpoint delta
-    tail, last action per path wins (S3 semantics,
-    InMemoryLogReplay.scala:51-84). This is the ST4 initial-snapshot
-    planner — it works even when W8 cleanup deleted the early deltas,
-    because the state it needs lives in the checkpoint."""
-    seg = get_log_segment(store, log_path, version_to_load=version)
-    active: dict = {}
-    cfiles = list(seg.checkpoint_files)
-    if len(cfiles) == 1 and fn.is_v2_checkpoint_file(cfiles[0]):
-        # V2 checkpoint: the manifest carries NO add/remove rows —
-        # the file state lives in its sidecar parquets. Without this
-        # resolution the initial snapshot would silently plan ZERO
-        # files for a v2-checkpointed table.
-        import pyarrow.parquet as pq
-        if "sidecar" in pq.read_schema(cfiles[0]).names:
-            for row in pq.read_table(cfiles[0],
-                                     columns=["sidecar"]).to_pylist():
-                sc = row.get("sidecar")
-                if sc and sc.get("path"):
-                    cfiles.append(
-                        fn.sidecar_file(seg.log_path, sc["path"]))
-    for cf in cfiles:
-        import pyarrow.parquet as pq
-        names = pq.read_schema(cf).names
-        cols = [c for c in ("add", "remove") if c in names]
-        for row in pq.read_table(cf, columns=cols).to_pylist():
-            a = row.get("add")
-            if a and a.get("path"):
-                active[a["path"]] = AddFile(
-                    path=a["path"],
-                    partitionValues=dict(a.get("partitionValues") or {}),
-                    size=a.get("size") or 0,
-                    modificationTime=a.get("modificationTime") or 0,
-                    dataChange=True, stats=a.get("stats"),
-                    tags=dict(a["tags"]) if a.get("tags") else None)
-            r = row.get("remove") if "remove" in row else None
-            if r and r.get("path"):
-                active.pop(r["path"], None)
-    for path in seg.deltas:
-        for line in store.read(path):
-            a = from_json_line(line)
-            if isinstance(a, AddFile):
-                active[a.path] = a
-            elif isinstance(a, RemoveFile):
-                active.pop(a.path, None)
-    return seg.version, list(active.values())
+def _replayed(store, table_path: str, group,
+              version: Optional[int] = None) -> LogReplay:
+    """The log-replay kernel of the table at ``version`` (None =
+    latest) with ``group``'s checkpoint columns folded in -- the
+    Snapshot's kernel, built Spark-free. It needs only the checkpoint
+    and the commits after it, so it works after W8 cleanup deleted the
+    early deltas."""
+    seg = get_log_segment(store, _log_path(table_path),
+                          version_to_load=version)
+    k = replay_segment(store, seg, strip_scheme(table_path).rstrip("/"))
+    k.load(seg, group)
+    return k
 
 
 class DeltaFilePartition(InputPartition):
@@ -288,7 +211,7 @@ class DeltaVersionStreamReader(DataSourceStreamReader):
             # ST3 on historical metadata changes/deletes. Explicit
             # startingVersion=0 restores full-history replay.
             try:
-                latest, _ = _snapshot_adds(self.store, self.log_path)
+                latest = get_log_segment(self.store, self.log_path).version
                 self.snapshot_first = True
                 self.start_after = latest
             except (FileNotFoundError, ValueError):
@@ -315,7 +238,7 @@ class DeltaVersionStreamReader(DataSourceStreamReader):
         # consumers can key on stable row identity across microbatches.
         self.with_row_ids = str(options.get("withrowids",
                                             "false")).lower() == "true"
-        meta = _latest_metadata(self.store, self.log_path)
+        meta = _replayed(self.store, self.table_path, HEADER).metadata
         if self.with_row_ids:
             from ..config import TableConfig
             if not TableConfig(meta.configuration).enable_row_tracking:
@@ -369,19 +292,20 @@ class DeltaVersionStreamReader(DataSourceStreamReader):
             return {"version": self.start_after, "snap": True}
         return {"version": self.start_after}
 
-    def _snap_files(self, v0: int) -> List[AddFile]:
-        """Sorted (deterministic) active file list at the snapshot
-        version — page boundaries are indices into THIS order, so a
-        restarted reader replans identical pages from the persisted
-        offsets."""
+    def _snap_files(self, v0: int) -> list:
+        """Active-file rows at the snapshot version, sorted by canonical
+        path (deterministic) — page boundaries are indices into THIS
+        order, so a restarted reader replans identical pages from the
+        persisted offsets."""
         cached = getattr(self, "_snap_cache", None)
         if cached is None or cached[0] != v0:
-            _, adds = _snapshot_adds(self.store, self.log_path, v0)
-            cached = (v0, sorted(adds, key=lambda a: a.path))
+            k = _replayed(self.store, self.table_path, FILES, v0)
+            cached = (v0, sorted(k.files.values(),
+                                 key=lambda r: r["path"]))
             self._snap_cache = cached
         return cached[1]
 
-    def _page_end(self, files: List[AddFile], pos: int) -> int:
+    def _page_end(self, files: list, pos: int) -> int:
         """End index of the snapshot page starting at pos: bounded by
         maxFilesPerTrigger (hard count) and maxBytesPerTrigger (soft
         sum — include files until the cumulative size reaches the cap,
@@ -393,7 +317,7 @@ class DeltaVersionStreamReader(DataSourceStreamReader):
             return cap
         end, total = pos, 0
         while end < cap:
-            total += files[end].size or 0
+            total += files[end]["size"] or 0
             end += 1
             if total >= self.max_bytes:
                 break
@@ -502,18 +426,19 @@ class DeltaVersionStreamReader(DataSourceStreamReader):
                 # (v0, end.version].
                 e = len(adds)
                 self._snap_done = True
-            for a in adds[s:e]:
+            for r in adds[s:e]:
                 # apply each active file's deletion vector (live rows
                 # only — a DV-deleted table must not redeliver its
                 # deleted rows in the snapshot); CDF mode tags the
                 # snapshot rows as inserts (delta-spark semantics).
+                # The row's path is canonical (physical) already:
+                # decoding it again would corrupt Hive %XX dir names.
                 out.append(DeltaFilePartition(
-                    self._fs_path(a.path), v0,
-                    dict(a.partitionValues or {}),
+                    r["path"], v0, dict(r["partitionValues"] or {}),
                     kind="insert" if self.cdf else "data",
-                    dv_rel=(a.tags or {}).get(DV_TAG),
-                    base_row_id=a.baseRowId,
-                    default_rcv=a.defaultRowCommitVersion))
+                    dv_rel=(r["tags"] or {}).get(DV_TAG),
+                    base_row_id=r["baseRowId"],
+                    default_rcv=r["defaultRowCommitVersion"]))
             # in-process paging floor for latestOffset: the engine
             # persists (start, end) in its WAL before execution, so a
             # failed batch replans this identical page — advancing the
@@ -777,7 +702,7 @@ class DeltaStreamDataSource(DataSource):
 
     def schema(self) -> StructType:
         store = default_log_store(self.options["path"])
-        meta = _latest_metadata(store, _log_path(self.options["path"]))
+        meta = _replayed(store, self.options["path"], HEADER).metadata
         extra = [StructField("_commit_version", LongType())]
         if str(self.options.get("readchangefeed",
                                 "false")).lower() == "true":

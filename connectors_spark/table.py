@@ -84,6 +84,10 @@ def _stats_numrecords_bound(files) -> Optional[int]:
     return total
 
 
+def _ckpt_version(seg: LogSegment) -> int:
+    return -1 if seg.checkpoint_version is None else seg.checkpoint_version
+
+
 def _canonical_table_path(table_path: str) -> str:
     """file:/local → absolute POSIX path; any other scheme stays a URI
     (its registered LogStore owns path semantics)."""
@@ -141,67 +145,30 @@ class DeltaLog:
             if cur is not None and cur.segment == seg:
                 return cur
             new = Snapshot(self.spark, self.table_path, seg, self.store)
-            # Incremental state update (r14, delta-spark's incremental
-            # InMemoryLogReplay): when the previous snapshot already
-            # materialized its inventory and the new segment merely
-            # extends it by tail commits on the same checkpoint, seed
-            # the new inventory by applying the tail's add/remove
-            # actions driver-side — O(tail), no Spark job, and at
-            # large scale no re-read of a million-file checkpoint per
-            # commit. Any surprise (missing delta file, parse error)
-            # falls back to the full distributed replay.
-            # The seed is valid across a checkpoint boundary too (r14):
-            # the materialized state at cur.version plus the raw delta
-            # files (cur.version, seg.version] IS the state at
-            # seg.version no matter which checkpoint the new segment
-            # prefers — commits are immutable once written, and a
-            # missing/cleaned delta file surfaces as FileNotFoundError
-            # in tail() and falls back to the full replay.
-            if cur is not None and seg.version == cur.segment.version:
-                # Same version, different segment composition (a new
-                # checkpoint or compaction appeared): the STATE is
-                # identical by definition, so the materialized planes
-                # carry over as-is instead of going cold.
-                for k in ("_files_rows", "_tombstone_rows"):
-                    if k in cur.__dict__:
-                        new.__dict__[k] = cur.__dict__[k]
-            if (cur is not None
-                    and ("_files_rows" in cur.__dict__
-                         or "_tombstone_rows" in cur.__dict__)
-                    and seg.version > cur.segment.version):
+            # Incremental replay (delta-spark's incremental
+            # InMemoryLogReplay): carry the previous Snapshot's kernel
+            # forward -- header and file planes -- and fold only the
+            # commits (cur.version, seg.version]: O(new commits), no
+            # Spark job, no checkpoint re-read. Commits are immutable,
+            # so this holds whichever checkpoint the new segment
+            # prefers; a plane the kernel has not loaded yet folds in
+            # the new segment's checkpoint later, which is sound while
+            # that checkpoint is no older than cur's. A missing delta
+            # file or a parse error leaves the new Snapshot cold.
+            if (cur is not None and "_replay" in cur.__dict__
+                    and seg.version >= cur.segment.version
+                    and _ckpt_version(seg) >= _ckpt_version(cur.segment)):
                 try:
-                    from .log.actions import from_json_line
-                    from .log.snapshot import (
-                        apply_tail_to_files_rows,
-                        apply_tail_to_tombstone_rows)
-
-                    def tail():
-                        for v in range(cur.segment.version + 1,
-                                       seg.version + 1):
-                            lines = self.store.read(
-                                fn.delta_file(self.log_path, v))
-                            yield v, [a for a in
-                                      (from_json_line(ln)
-                                       for ln in lines)
-                                      if a is not None]
-
-                    tail_actions = list(tail())
-                    if "_files_rows" in cur.__dict__:
-                        new.__dict__["_files_rows"] = \
-                            apply_tail_to_files_rows(
-                                cur._files_rows, tail_actions,
-                                self.table_path)
-                    # tombstone plane seeds the same way (r14): a
-                    # checkpoint write or vacuum that materialized the
-                    # tombstones keeps them warm across commits
-                    if "_tombstone_rows" in cur.__dict__:
-                        new.__dict__["_tombstone_rows"] = \
-                            apply_tail_to_tombstone_rows(
-                                cur._tombstone_rows, tail_actions,
-                                self.table_path)
+                    tail = [(v, [a for a in map(from_json_line,
+                                                self.store.read(
+                                                    fn.delta_file(
+                                                        self.log_path, v)))
+                                 if a is not None])
+                            for v in range(cur.segment.version + 1,
+                                           seg.version + 1)]
+                    new._seed(cur, tail)
                 except Exception:  # noqa: BLE001 — seed is best-effort
-                    new.__dict__.pop("_files_rows", None)
-                    new.__dict__.pop("_tombstone_rows", None)
+                    pass
             self._snapshot = new
             return self._snapshot
 

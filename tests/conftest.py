@@ -28,6 +28,22 @@ def spark():
 
 
 @pytest.fixture()
+def window_plan_builds(monkeypatch):
+    """Records the version of every Snapshot whose distributed replay
+    plan (``actions_df``, under ``files_df`` and ``_all_tombstones_df``)
+    is built while the test runs."""
+    from connectors_spark.log.snapshot import Snapshot
+    built = []
+    orig = Snapshot.actions_df
+
+    def actions_df(self):
+        built.append(self.version)
+        return orig(self)
+    monkeypatch.setattr(Snapshot, "actions_df", actions_df)
+    return built
+
+
+@pytest.fixture()
 def sf_dir():
     return SF_DIR
 

@@ -126,12 +126,17 @@ def test_partitioned_update_cdc_carries_partition_columns(spark, tmp_path):
 def test_reorg_purge_emits_nothing_and_dv_deletes_survive(spark, tmp_path):
     """REORG PURGE is dataChange=False end to end: the change feed
     shows the DV delete at its own version and NOTHING for the purge,
-    and post-purge reads equal pre-purge reads."""
+    and post-purge reads equal pre-purge reads. The table is ONE file,
+    so the DV delete leaves it partly live and the purge really
+    rewrites it (with several files, ``k < 5`` empties a whole file,
+    the delete drops it, and there is nothing to purge)."""
     rows = [Row(k=i, v=chr(97 + i % 3)) for i in range(20)]
-    t = _mk(spark, tmp_path, rows)
+    t = DeltaTable.for_path(spark, str(tmp_path / "t"))
+    t.write(spark.createDataFrame(rows).coalesce(1), configuration=CDF)
     t.delete(Col("k") < Lit(5), deletion_vectors=True)
     before = {(r["k"], r["v"]) for r in t.to_df().collect()}
     res = TableMaintenance(t).reorg_purge()
+    assert res["filesPurged"] > 0
     pv = res["version"]
     assert t.table_changes(pv, pv).count() == 0
     assert _changes(t, 1, 1) == {(i, chr(97 + i % 3), "delete", 1)

@@ -5,10 +5,6 @@ from __future__ import annotations
 import os
 
 import pytest
-# Integration-heavy: excluded from the fast inner loop (pytest -m "not slow");
-# the full suite still runs these unchanged at round close-out (SURVEY 5).
-pytestmark = pytest.mark.slow
-
 from pyspark.sql import functions as F
 
 from connectors_spark import DeltaTable

@@ -2,7 +2,6 @@
 replay reads one net-action file in place of a delta range; raw deltas
 are never deleted, so per-version consumers are untouched."""
 
-import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -10,8 +9,6 @@ from connectors_spark import DeltaTable
 from connectors_spark.expressions import Col, Lit
 from connectors_spark.log import filenames as fn
 from connectors_spark.table import TableMaintenance
-
-pytestmark = pytest.mark.slow
 
 
 def _mk(spark, path, n_appends=6):

@@ -824,13 +824,16 @@ def test_incremental_tombstone_state_matches_full_replay(spark, tmp_path):
         == sorted(map(tkey, fresh.retained_tombstones(0).collect()))
 
 
-def test_tombstone_rows_driver_side_matches_window_plan(spark, tmp_path):
-    # r14: cold tombstone materialization reads the classic checkpoint's
-    # remove column driver-side and replays the JSON tail through
-    # apply_tail_to_tombstone_rows. Must be field-identical (version
-    # stamp included — both attribute checkpoint rows to the checkpoint
-    # version) to the distributed window plan, across checkpointed
-    # tombstones, DV-delete tags, a re-added path, and tail removes.
+def test_tombstone_rows_driver_side_matches_window_plan(spark, tmp_path,
+                                                       window_plan_builds):
+    # a cold Snapshot's tombstone plane comes from the log-replay kernel:
+    # the classic checkpoint's remove column read driver-side plus the
+    # JSON tail folded through apply_tail_to_files_rows. Must be
+    # field-identical (version stamp included -- both attribute
+    # checkpoint rows to the checkpoint version) to the distributed
+    # window plan, across checkpointed tombstones, DV-delete tags, a
+    # re-added path, and tail removes; the window plan is not built
+    # until the comparison.
     from connectors_spark import DeltaTable
     from connectors_spark.expressions import Col, Lit
     from connectors_spark.log.snapshot import Snapshot
@@ -848,8 +851,9 @@ def test_tombstone_rows_driver_side_matches_window_plan(spark, tmp_path):
     t.delete(Col("o_orderkey") < Lit(200))     # v5 (tail remove)
     snap = Snapshot(spark, t.path, t.log.snapshot().segment,
                     t.log.store)
-    drows = snap._tombstone_rows_driver_side()
-    assert drows is not None                   # shape was eligible
+    window_plan_builds.clear()
+    drows = snap._tombstone_rows
+    assert not window_plan_builds              # the kernel served it
     assert len(drows) > 0
 
     def k(r):
@@ -863,13 +867,16 @@ def test_tombstone_rows_driver_side_matches_window_plan(spark, tmp_path):
     assert sorted(map(k, drows)) == sorted(map(k, wrows))
 
 
-def test_files_rows_driver_side_matches_window_plan(spark, tmp_path):
-    # r15: cold ACTIVE-FILE materialization seeds from the classic
-    # checkpoint's add column driver-side and replays the JSON tail
-    # through apply_tail_to_files_rows (the files-plane twin of the r14
-    # tombstone pin above). Must be field-identical — version stamp
-    # included — to the distributed window plan, across checkpointed
-    # adds, DV tags, partition values, a delete, and tail adds/removes.
+def test_files_rows_driver_side_matches_window_plan(spark, tmp_path,
+                                                   window_plan_builds):
+    # a cold Snapshot's active-file plane comes from the log-replay
+    # kernel: the classic checkpoint's add column read driver-side plus
+    # the JSON tail folded through apply_tail_to_files_rows (the
+    # files-plane twin of the tombstone pin above). Must be
+    # field-identical -- version stamp included -- to the distributed
+    # window plan, across checkpointed adds, DV tags, partition values,
+    # a delete, and tail adds/removes; the window plan is not built
+    # until the comparison.
     from connectors_spark import DeltaTable
     from connectors_spark.expressions import Col, Lit
     from connectors_spark.log.snapshot import Snapshot
@@ -886,8 +893,9 @@ def test_files_rows_driver_side_matches_window_plan(spark, tmp_path):
     t.write(orders.limit(50), mode="append")   # v5 (tail add)
     snap = Snapshot(spark, t.path, t.log.snapshot().segment,
                     t.log.store)
-    drows = snap._files_rows_driver_side()
-    assert drows is not None                   # shape was eligible
+    window_plan_builds.clear()
+    drows = snap._files_rows
+    assert not window_plan_builds              # the kernel served it
     assert len(drows) > 0
 
     def k(r):
